@@ -1276,39 +1276,27 @@ object SparkEntry {
       // BM25-shaped keyword retrieval, the vector module's lexical
       // complement. Query = the 8 RAREST distinct tokens of doc 0
       // (rarity by corpus df, ties by token — deterministic and
-      // discriminative). Integer-only scoring: idf = 64 - bitlen(df),
-      // tf saturated at 3 — Lexical.lexicalTopK's exact arithmetic.
-      // ONE corpus tokenize pass (r06): the (doc, tok, tf) table over
-      // doc-0's token set is materialized once and serves both the
-      // rarity ranking (df = count of tf rows per tok — tf rows are
-      // distinct (doc, tok), so counting them IS the doc frequency,
-      // same as the previous count_distinct) and the final scoring,
-      // which previously re-tokenized the whole corpus inside
-      // lexicalTopK. Only query-term tokens ever shuffle (broadcast
-      // semi-join before tf), as before.
+      // discriminative), scored by Lexical.scoreTopK. ONE corpus
+      // tokenize pass (r06): the (doc, tok, tf) table over doc-0's token
+      // set serves both the rarity ranking (df = count of tf rows per
+      // tok — tf rows are distinct (doc, tok)) and the scoring, which
+      // lexicalTopK would otherwise re-tokenize; on the 8-term subset
+      // its tf/df are exactly these rows (OpsSpec pins the equality).
+      // Only query-term tokens ever shuffle (broadcast semi-join before
+      // tf).
       val docs = t(s, dir, "documents")
-      def toks(d: org.apache.spark.sql.DataFrame) = d.select(col("doc_id"),
-          explode(split(trim(lower(col("text"))), "[ \t\n\f\r]+")).as("tok"))
-        .where(col("tok") =!= "")
-      val q0 = toks(docs.where(col("doc_id") === 0L))
+      val q0 = graft.ops.TextAnalysis
+        .wordTokens(docs.where(col("doc_id") === 0L), col("doc_id"))
         .select(col("tok")).distinct()
       // tfAll's (doc_id, tok) agg exchange subtree is shared verbatim by
       // both consumers (rarity ranking + scoring probe), so runtime
       // exchange reuse computes the tokenize pass once — no checkpoint
-      val tfAll = toks(docs).join(broadcast(q0), "tok")
+      val tfAll = graft.ops.TextAnalysis.wordTokens(docs, col("doc_id"))
+        .join(broadcast(q0), "tok")
         .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf"))
       val dfq = tfAll.groupBy(col("tok")).agg(count(lit(1)).as("df"))
       val qterms = dfq.orderBy(col("df"), col("tok")).limit(8)
-      // score(d) = Σ_t min(tf, 3) · (64 − bitlen(df)) over the 8 query
-      // terms — bit-identical to lexicalTopK(docs, qterms, 10): its
-      // internal tf/df over the 8-term subset are exactly these rows
-      tfAll.join(broadcast(qterms), "tok")
-        .select(col("doc_id"),
-          (least(col("tf"), lit(3L)) *
-            (lit(64) - length(bin(col("df"))))).as("contrib"))
-        .groupBy(col("doc_id")).agg(sum(col("contrib")).as("score"))
-        .orderBy(col("score").desc, col("doc_id"))
-        .limit(10)
+      graft.ops.Lexical.scoreTopK(tfAll, qterms, 10)
         .orderBy(col("score").desc, col("doc_id"))
     }),
 

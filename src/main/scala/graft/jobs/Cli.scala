@@ -1,6 +1,7 @@
 package graft.jobs
 
 import graft.table.{IcebergLite, SyntheticPages}
+import graft.util.LocalSpark
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -21,15 +22,7 @@ import org.apache.spark.sql.functions._
 object Cli {
 
   private def session(cpus: String): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-cli")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.columnarReaderBatchSize", "64")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = LocalSpark.builder(cpus.toInt, "graft-cli").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -2,6 +2,7 @@ package graft.jobs
 
 import graft.extract.{CascadeConfig, Extract}
 import graft.table.{IcebergLite, SyntheticPages}
+import graft.util.LocalSpark
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -134,19 +135,11 @@ object ExtractJob {
     val outPath = args(0)
     val nPages = if (args.length > 1) args(1).toLong else 20000L
     val nUnits = if (args.length > 2) args(2).toInt else 8
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-extract")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.columnarReaderBatchSize", "64")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = LocalSpark.builder(cpus, "graft-extract").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val cfg = ExtractJobConfig(nUnits = nUnits, partitionsPerUnit = cpus.toInt)
+    val cfg = ExtractJobConfig(nUnits = nUnits, partitionsPerUnit = cpus)
     val out = new IcebergLite(outPath)
     val perUnit = (nPages + nUnits - 1) / nUnits
     def unitPages(u: Int): DataFrame = {

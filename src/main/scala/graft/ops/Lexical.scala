@@ -42,17 +42,24 @@ object Lexical {
     */
   def lexicalTopK(docs: DataFrame, queryTerms: DataFrame, k: Int,
       satCap: Int = 3): DataFrame = {
-    require(k >= 1 && satCap >= 1, s"k=$k, satCap=$satCap must be >= 1")
-    val toks = docs.select(col("doc_id"),
-        explode(split(trim(lower(col("text"))), "[ \t\n\f\r]+")).as("tok"))
-      .where(col("tok") =!= "")
-    val hits = toks.join(
+    val hits = TextAnalysis.wordTokens(docs, col("doc_id")).join(
       broadcast(queryTerms.select(col("tok")).distinct()), "tok")
     val tf = hits.groupBy(col("doc_id"), col("tok"))
       .agg(count(lit(1)).as("tf"))
     // tf rows are distinct (doc, tok), so counting them per tok IS the
     // document frequency — no second corpus pass
     val dfreq = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
+    scoreTopK(tf, dfreq, k, satCap)
+  }
+
+  /** The scoring half of [[lexicalTopK]], for callers that already hold
+    * the term statistics: tf = (doc_id, tok, tf), dfreq = (tok, df) of
+    * the query terms (tiny, it broadcasts) → (doc_id, score), the k
+    * highest Σ_t min(tf, satCap) · (64 − bitlen(df)), then doc_id asc.
+    */
+  def scoreTopK(tf: DataFrame, dfreq: DataFrame, k: Int,
+      satCap: Int = 3): DataFrame = {
+    require(k >= 1 && satCap >= 1, s"k=$k, satCap=$satCap must be >= 1")
     tf.join(broadcast(dfreq), "tok")
       .select(col("doc_id"),
         (least(col("tf"), lit(satCap.toLong)) *
@@ -90,11 +97,8 @@ object Lexical {
   def invertedIndex(docs: DataFrame, blockSize: Int = 128,
       dfCap: Long = 100000): DataFrame = {
     require(blockSize >= 1 && dfCap >= 1, s"blockSize=$blockSize dfCap=$dfCap")
-    val toks = docs.select(col("doc_id"),
-        explode(split(trim(lower(col("text"))), "[ \t\n\f\r]+")).as("tok"))
-      .where(col("tok") =!= "")
-    val tf = toks.groupBy(col("tok"), col("doc_id"))
-      .agg(count(lit(1)).as("tf"))
+    val tf = TextAnalysis.wordTokens(docs, col("doc_id"))
+      .groupBy(col("tok"), col("doc_id")).agg(count(lit(1)).as("tf"))
     // df via an agg + equi-join, NOT a count-over-window: the window
     // would sort EVERY term's postings — including the stopworded hot
     // terms, which are precisely the lists whose single-partition sort

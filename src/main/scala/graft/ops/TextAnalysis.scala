@@ -31,6 +31,16 @@ object TextAnalysis {
   def bpeTokenCount(text: Column): Column =
     size(regexp_extract_all(text, lit(BpeTokenPattern), lit(0))).cast("long")
 
+  /** The corpus word tokenizer: lowercase, trim, split on Python-`\s`
+    * whitespace, one row per word, empty words dropped — `docs.text` →
+    * (keep..., tok). Lexical retrieval, inverted indexing and the NB
+    * classifier all tokenize here.
+    */
+  def wordTokens(docs: DataFrame, keep: Column*): DataFrame =
+    docs.select(keep :+
+        explode(split(trim(lower(col("text"))), "[ \t\n\f\r]+")).as("tok"): _*)
+      .where(col("tok") =!= "")
+
   /** Stopword sets per language for the n-gram language heuristic.
     * Word lists are the top function words of each language (public
     * knowledge).
@@ -491,14 +501,6 @@ object TextAnalysis {
 
   // ---------------- Naive-Bayes quality classifier ----------------
 
-  /** Tokens + binary label, the shared front of the NB train/apply
-    * paths: (doc_id, is_pos, tok).
-    */
-  private def nbTokens(docs: DataFrame, isPos: Column): DataFrame =
-    docs.select(col("doc_id"), isPos.as("is_pos"),
-        explode(split(trim(lower(col("text"))), "[ \t\n\f\r]+")).as("tok"))
-      .where(col("tok") =!= "")
-
   /** Multinomial-NB per-token weights, trained DISTRIBUTED: one
     * tokenize pass → per-token class counts (map-side combined), then
     * each vocab row gets the integer millibit log-likelihood ratio
@@ -514,7 +516,7 @@ object TextAnalysis {
   def nbWeights(docs: DataFrame, isPos: Column): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val counts = nbTokens(docs, isPos)
+    val counts = wordTokens(docs, col("doc_id"), isPos.as("is_pos"))
       .groupBy(col("tok"))
       .agg(sum(when(col("is_pos"), 1L).otherwise(0L)).as("c1"),
         sum(when(col("is_pos"), 0L).otherwise(1L)).as("c0"))
@@ -553,7 +555,7 @@ object TextAnalysis {
   def nbClassify(docs: DataFrame, isPos: Column): DataFrame = {
     val w = nbWeights(docs, isPos)
     val prior = nbPrior(docs, isPos)
-    val sums = nbTokens(docs, isPos)
+    val sums = wordTokens(docs, col("doc_id"), isPos.as("is_pos"))
       .join(w.select(col("tok"), col("w_mb")), "tok")
       .groupBy(col("doc_id")).agg(sum(col("w_mb")).as("s"))
     docs.select(col("doc_id"), isPos.as("is_pos"))

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.util.LocalSpark
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -16,15 +17,8 @@ import org.apache.spark.sql.functions._
 object BenchExtra {
 
   private def session(cpus: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench-extra")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
+    val s = LocalSpark.builder(cpus, "graft-bench-extra")
       .config("spark.sql.files.maxPartitionBytes", (4 * 1024 * 1024).toString)
-      .config("spark.sql.parquet.columnarReaderBatchSize", "64")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

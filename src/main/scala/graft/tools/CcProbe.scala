@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.util.LocalSpark
 import org.apache.spark.sql.functions._
 
 /** Connected-components round-bound probe: mines the dedup_cc query's
@@ -14,14 +14,8 @@ object CcProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val reps = if (args.length > 1) args(1).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("cc-probe")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = LocalSpark.builder(cpus, "cc-probe").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .where(col("doc_id") < 2000)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.util.LocalSpark
 import java.nio.file.{Files, Paths}
 
 /** Writes PLANS.md: the formatted physical plan of each headline query
@@ -241,13 +241,7 @@ object DumpPlans {
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-plans")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSpark.builder(8, "graft-plans").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder
     sb.append("# PLANS — physical plans of the headline queries (generated)\n\n")

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.util.LocalSpark
 
 /** One timed extraction pass over a pre-staged pages dir at a given
   * parallelism — the unit step of the two-JVM bandwidth adjudication:
@@ -17,13 +17,8 @@ object ExtractRate {
     val dir = args(0)
     val threads = args(1).toInt
     val reps = if (args.length > 2) args(2).toInt else 2
-    val spark = SparkSession.builder()
-      .master(s"local[$threads]")
-      .appName(s"extract-rate-$threads")
-      .config("spark.sql.shuffle.partitions", threads.toString)
+    val spark = LocalSpark.builder(threads, s"extract-rate-$threads")
       .config("spark.sql.files.maxPartitionBytes", (4 * 1024 * 1024).toString)
-      .config("spark.sql.parquet.columnarReaderBatchSize", "64")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val pages = spark.read.parquet(dir)
@@ -47,9 +42,7 @@ object StagePages {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val pages = if (args.length > 1) args(1).toLong else 480000L
-    val spark = SparkSession.builder()
-      .master("local[32]").appName("stage-pages")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = LocalSpark.builder(32, "stage-pages").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.table.SyntheticPages.generate(spark, pages, partitions = 128)
       .toDF().write.mode("overwrite").parquet(dir)

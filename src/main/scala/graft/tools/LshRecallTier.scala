@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.util.LocalSpark
 import org.apache.spark.sql.functions._
 
 /** lshSizing validation at a mid-scale tier (round-4 verdict item 7):
@@ -31,14 +31,8 @@ object LshRecallTier {
   def main(args: Array[String]): Unit = {
     val factor = if (args.length > 0) args(0).toInt else 100
     val threshold = if (args.length > 1) args(1).toDouble else 0.9
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"lsh-recall-$factor")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = LocalSpark.builder(cpus, s"lsh-recall-$factor").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

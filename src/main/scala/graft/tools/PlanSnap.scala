@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.util.LocalSpark
 import java.nio.file.{Files, Paths}
 
 /** Snapshots the `.explain("formatted")` output of named driver queries
@@ -24,13 +24,7 @@ object PlanSnap {
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.01"
     Files.createDirectories(outDir)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-plansnap")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSpark.builder(8, "graft-plansnap").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>
       val plan = graft.SparkEntry.queries(name)(spark, sfDir)

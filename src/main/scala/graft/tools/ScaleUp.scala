@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.util.LocalSpark
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Synthesize a larger scale tier from an existing testdata dir by
@@ -25,13 +26,7 @@ object ScaleUp {
     val out = args(1)
     val factor = if (args.length > 2) args(2).toInt else 10
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scaleup")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSpark.builder(cpus, "graft-scaleup").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def replicate(table: String, idCols: Seq[String]): Unit = {

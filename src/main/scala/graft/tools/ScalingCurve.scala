@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.util.LocalSpark
 import org.apache.spark.sql.SparkSession
 import scala.jdk.CollectionConverters._
 
@@ -29,13 +30,8 @@ object ScalingCurve {
       .split(",").map(_.trim.toInt).toSeq
 
     def session(n: Int): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$n]")
-        .appName(s"scaling-curve-$n")
-        .config("spark.sql.shuffle.partitions", n.toString)
+      val s = LocalSpark.builder(n, s"scaling-curve-$n")
         .config("spark.sql.files.maxPartitionBytes", (4 * 1024 * 1024).toString)
-        .config("spark.sql.parquet.columnarReaderBatchSize", "64")
-        .config("spark.ui.enabled", "false")
         .getOrCreate()
       s.sparkContext.setLogLevel("WARN")
       s

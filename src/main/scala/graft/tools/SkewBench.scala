@@ -1,6 +1,7 @@
 package graft.tools
 
 import graft.jobs.{ExtractJob, ExtractJobConfig}
+import graft.util.LocalSpark
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
@@ -25,15 +26,8 @@ import java.nio.file.Files
 object SkewBench {
 
   private def session(cpus: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-skewbench-$cpus")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
+    val s = LocalSpark.builder(cpus, s"graft-skewbench-$cpus")
       .config("spark.sql.files.maxPartitionBytes", (4 * 1024 * 1024).toString)
-      .config("spark.sql.parquet.columnarReaderBatchSize", "64")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.util.LocalSpark
 
 /** Ad-hoc operator timing harness (reps; rep 1 includes JIT — trust 2+).
   * Currently: neardup-LSH bits/tables sweep, the knobs that must grow
@@ -14,13 +14,7 @@ object TimeOp {
     val tables = if (args.length > 2) args(2).toInt else 8
     val reps = if (args.length > 3) args(3).toInt else 2
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-timeop")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSpark.builder(cpus, "graft-timeop").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     (1 to reps).foreach { i =>

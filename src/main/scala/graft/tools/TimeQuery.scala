@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.util.LocalSpark
 
 /** One-query timing harness for plan iteration:
   * runMain graft.tools.TimeQuery <queryName> <sfDir> [reps=2]
@@ -10,15 +10,8 @@ object TimeQuery {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"time-$name")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = LocalSpark.builder(cpus, s"time-$name").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     for (r <- 1 to reps) {
       val t0 = System.nanoTime()

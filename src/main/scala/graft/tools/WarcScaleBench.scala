@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.util.LocalSpark
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -60,13 +61,7 @@ object WarcScaleBench {
     val splitBytes = (if (args.length > 5) args(5).toLong else 4L) * 1024 * 1024
 
     def session(n: Int): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$n]")
-        .appName(s"warc-scale-$n")
-        .config("spark.sql.shuffle.partitions", n.toString)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+      val s = LocalSpark.builder(n, s"warc-scale-$n").getOrCreate()
       s.sparkContext.setLogLevel("WARN")
       s
     }

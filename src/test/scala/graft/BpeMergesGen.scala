@@ -9,19 +9,14 @@ import java.nio.file.{Files, Paths}
   *   sbt "Test/runMain graft.BpeMergesGen"
   *
   * writes src/test/resources/golden/bpe_merges.txt (deterministic:
-  * lexicographic tie-breaks, sorted corpus order). After regenerating,
+  * code-point-order tie-breaks, sorted corpus order). After regenerating,
   * ALSO regenerate the dual-derived golden:
   *
   *   python3 tools/bpe_expected.py
   */
 object BpeMergesGen {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[8]")
-      .appName("bpe-merges-gen")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.util.LocalSpark.builder(8, "bpe-merges-gen").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

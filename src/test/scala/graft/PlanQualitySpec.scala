@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -10,14 +9,7 @@ import java.nio.file.Files
   * parquet scan). These assertions fail if a refactor accidentally
   * hides a filter behind a mapPartitions or widens a scan.
   */
-class PlanQualitySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("plan-quality-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PlanQualitySpec extends AnyFunSuite with SparkSpec {
 
   private lazy val pagesPath: String = {
     val dir = Files.createTempDirectory("plan-pages").toString

@@ -1,6 +1,6 @@
 package graft.extract
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSpec
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,15 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * comment/script traps, nested markup in anchors, entity decode,
   * host resolution branches, hrefless anchors.
   */
-class LinksSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("links-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class LinksSpec extends AnyFunSuite with SparkSpec {
 
   private def links(html: String, url: String = "https://s.example/p") = {
     import spark.implicits._

@@ -1,16 +1,9 @@
 package graft.extract
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSpec
 import org.scalatest.funsuite.AnyFunSuite
 
-class SitemapSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("sitemap-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SitemapSpec extends AnyFunSuite with SparkSpec {
 
   import spark.implicits._
 

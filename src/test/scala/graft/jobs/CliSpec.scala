@@ -1,5 +1,6 @@
 package graft.jobs
 
+import graft.SparkSpec
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
@@ -7,11 +8,10 @@ import java.nio.file.Files
   * (core/cli/app.py:131-215, 218-271) over the library seams, plus the
   * staged (cache-free) extract path.
   *
-  * Cli.main manages its own SparkSession via getOrCreate/stop; suites
-  * run sequentially in the forked test JVM, so later suites re-create a
-  * fresh session.
+  * Cli.main manages its own SparkSession via getOrCreate/stop, so each
+  * test takes the session afresh (`session()`) after a verb ran.
   */
-class CliSpec extends AnyFunSuite {
+class CliSpec extends AnyFunSuite with SparkSpec {
 
   private def withCpus[A](f: => A): A = f // env SPARK_GRAFT_CPUS inherited
 
@@ -23,8 +23,7 @@ class CliSpec extends AnyFunSuite {
     val out = work.resolve("embeddings_out").toString
     withCpus(Cli.main(Array("embed", txt.toString, out, "--chunk-size", "200")))
 
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").config("spark.ui.enabled", "false").getOrCreate()
+    val spark = session()
     val df = spark.read.parquet(out)
     assert(df.columns.toSet == Set("chunk_index", "chunk_text", "embedding"))
     val rows = df.count()
@@ -35,8 +34,7 @@ class CliSpec extends AnyFunSuite {
 
   test("embed verb: pre-chunked parquet without chunk_index gets a distributed id (no global sort)") {
     val work = Files.createTempDirectory("cli-embed-prechunked")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").config("spark.ui.enabled", "false").getOrCreate()
+    val spark = session()
     import spark.implicits._
     val in = work.resolve("chunks_in").toString
     (1 to 200).map(i => s"pre-chunked text body number $i")
@@ -44,8 +42,7 @@ class CliSpec extends AnyFunSuite {
       .write.parquet(in)
     val out = work.resolve("emb_out").toString
     Cli.main(Array("embed", in, out))
-    val spark2 = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").config("spark.ui.enabled", "false").getOrCreate()
+    val spark2 = session()
     val df = spark2.read.parquet(out)
     assert(df.count() == 200)
     // ids must be unique across partitions (monotonically_increasing_id,
@@ -64,8 +61,7 @@ class CliSpec extends AnyFunSuite {
     val work = Files.createTempDirectory("cli-extract")
     val out = work.resolve("table").toString
     Cli.main(Array("extract", "synth:200", out, "--units", "2"))
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").config("spark.ui.enabled", "false").getOrCreate()
+    val spark = session()
     val t = new graft.table.IcebergLite(out)
     assert(t.committedUnits(spark) == Seq(0, 1))
     assert(t.read(spark).count() == 200)
@@ -87,8 +83,7 @@ class CliSpec extends AnyFunSuite {
     }
     val out = work.resolve("table").toString
     Cli.main(Array("extract", s"warc:$warcDir", out, "--units", "2"))
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").config("spark.ui.enabled", "false").getOrCreate()
+    val spark = session()
     val t = new graft.table.IcebergLite(out)
     assert(t.read(spark).count() == 50)
     assert(t.read(spark).where(org.apache.spark.sql.functions.col("succeeded"))
@@ -101,8 +96,7 @@ class CliSpec extends AnyFunSuite {
     val work = Files.createTempDirectory("cli-extract-empty")
     val out = work.resolve("table").toString
     Cli.main(Array("extract", "synth:3", out, "--units", "8"))
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").config("spark.ui.enabled", "false").getOrCreate()
+    val spark = session()
     val t = new graft.table.IcebergLite(out)
     assert(t.committedUnits(spark) == (0 until 8))
     assert(t.read(spark).count() == 3)
@@ -113,8 +107,7 @@ class CliSpec extends AnyFunSuite {
     val out = work.resolve("table").toString
     Cli.main(Array("extract", "synth:100", out,
       "--extractors", "http", "--min-length", "10"))
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").config("spark.ui.enabled", "false").getOrCreate()
+    val spark = session()
     import org.apache.spark.sql.functions._
     val strategies = new graft.table.IcebergLite(out).read(spark)
       .where(col("succeeded"))
@@ -131,8 +124,7 @@ class CliSpec extends AnyFunSuite {
     val work = Files.createTempDirectory("cli-async")
     val tbl = work.resolve("table").toString
     Cli.main(Array("extract", "synth:60", tbl, "--async", "--min-length", "10"))
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").config("spark.ui.enabled", "false").getOrCreate()
+    val spark = session()
     import org.apache.spark.sql.functions._
     val strategies = new graft.table.IcebergLite(tbl).read(spark)
       .where(col("succeeded")).select("strategy_used").distinct()
@@ -186,8 +178,7 @@ class CliSpec extends AnyFunSuite {
     val work = Files.createTempDirectory("cli-url")
     val tbl = work.resolve("table").toString
     Cli.main(Array("extract", "url:example.com/article", tbl, "--units", "1"))
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").config("spark.ui.enabled", "false").getOrCreate()
+    val spark = session()
     val rows = new graft.table.IcebergLite(tbl).read(spark)
       .select("url", "succeeded", "failure_reason").collect()
     assert(rows.length == 1)
@@ -206,8 +197,7 @@ class CliSpec extends AnyFunSuite {
     Cli.main(Array("embed", txt.toString, emb, "--chunk-size", "120"))
     Cli.main(Array("index", emb, idx))
 
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").config("spark.ui.enabled", "false").getOrCreate()
+    val spark = session()
     val table = new graft.table.IcebergLite(idx)
     assert(table.committedUnits(spark) == Seq(0))
     val index = table.read(spark)

@@ -1,7 +1,8 @@
 package graft.jobs
 
+import graft.SparkSpec
 import graft.table.{IcebergLite, SyntheticPages}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -10,15 +11,7 @@ import java.nio.file.Files
   * (kill-and-rerun yields an identical table), manifest lineage,
   * size-bucketed processing.
   */
-class ExtractJobSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("extract-job-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ExtractJobSpec extends AnyFunSuite with SparkSpec {
 
   private val nPages = 240L
   private val cfg = ExtractJobConfig(nUnits = 6, partitionsPerUnit = 4)

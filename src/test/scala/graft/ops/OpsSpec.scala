@@ -1,17 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class OpsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("ops-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class OpsSpec extends AnyFunSuite with SparkSpec {
 
   import spark.implicits._
 
@@ -969,6 +962,23 @@ class OpsSpec extends AnyFunSuite {
     def run(p: Int) = Lexical.lexicalTopK(d.repartition(p), q, 10)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(run(1) == run(7))
+  }
+
+  test("search_lexical == lexicalTopK over the 8 rarest doc-0 terms") {
+    val texts = docs.select("doc_id", "text").as[(Long, String)].collect()
+    def words(t: String) = Option(t).toSeq.flatMap(_.toLowerCase(java.util.Locale.ROOT)
+      .split("[ \t\n\f\r]+").filter(_.nonEmpty).distinct)
+    val df = texts.toSeq.flatMap(r => words(r._2))
+      .groupBy(identity).map { case (w, ws) => w -> ws.size }
+    val q = words(texts.find(_._1 == 0L).get._2).sortBy(w => (df(w), w)).take(8)
+    assert(q.size == 8)
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    // the query reads the same tier directory `docs` comes from
+    val tier = new org.apache.hadoop.fs.Path(docs.inputFiles.head).getParent.toString
+    val got = rows(graft.SparkEntry.queries("search_lexical")(spark, tier))
+    assert(got.size == 10)
+    assert(got == rows(Lexical.lexicalTopK(docs, q.toDF("tok"), 10)))
   }
 
   test("invertedIndex: gap encoding, block boundaries, stopwording") {

@@ -1,6 +1,6 @@
 package graft.rag
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,14 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * delete, stats) plus the post-top-k filter quirk
   * (file_store.py:104-121) and the embed determinism contract.
   */
-class RagSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("rag-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RagSpec extends AnyFunSuite with SparkSpec {
 
   import spark.implicits._
 

@@ -1,5 +1,6 @@
 package graft.table
 
+import graft.SparkSpec
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,14 +9,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * divergence: JSON bodies are Spark to_json compact form, not Python
   * json.dumps(indent=2); field names and order are pinned here.
   */
-class FormatSinkSpec extends AnyFunSuite {
+class FormatSinkSpec extends AnyFunSuite with SparkSpec {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("format-sink-spec")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  override protected def session(): SparkSession = {
+    val s = super.session()
+    s.conf.set("spark.sql.shuffle.partitions", "2")
+    s
+  }
 
   import spark.implicits._
 

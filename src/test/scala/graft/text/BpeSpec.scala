@@ -1,8 +1,9 @@
 package graft.text
 
+import graft.SparkSpec
 import org.scalatest.funsuite.AnyFunSuite
 
-class BpeSpec extends AnyFunSuite {
+class BpeSpec extends AnyFunSuite with SparkSpec {
 
   test("pretokenize matches the piece pattern (leading-space words, digits, punct, ws runs)") {
     val pieces = Bpe.pretokenize("Hello world, 42 times!\n").toSeq
@@ -66,12 +67,6 @@ class BpeSpec extends AnyFunSuite {
   }
 
   test("trainDistributed == single-machine train, independent of partitioning") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .appName("bpe-train-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     import spark.implicits._
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select("doc_id", "text")
@@ -86,6 +81,29 @@ class BpeSpec extends AnyFunSuite {
     // equality cross-check (VERDICT r05 next #2)
     val rounds = Bpe.trainDistributedRounds(docs.repartition(7), numMerges = 24)
     assert(rounds == local)
+  }
+
+  test("every trainer breaks a frequency tie in code-point order") {
+    import spark.implicits._
+    // one tie at freq 2: the U+FFFD pair vs the U+10000 (surrogate
+    // pair) pair — code-point order picks U+FFFD, Java String '<'
+    // would pick U+10000
+    val texts = Seq("\uFFFD\uFFFD", "\uFFFD\uFFFD",
+      "\uD800\uDC00\uD800\uDC00", "\uD800\uDC00\uD800\uDC00")
+    val want = Seq(("\uFFFD", "\uFFFD"))
+    assert(Bpe.train(texts, numMerges = 1) == want)
+    assert(Bpe.trainDistributed(texts.toDF("text"), numMerges = 1) == want)
+    assert(Bpe.trainDistributedRounds(texts.toDF("text"), numMerges = 1) == want)
+  }
+
+  test("minPairFreq below 1 is rejected, not a null merge") {
+    import spark.implicits._
+    intercept[IllegalArgumentException] {
+      Bpe.trainWeighted(Array(("ab", 0L)), 1, minPairFreq = 0)
+    }
+    intercept[IllegalArgumentException] {
+      Bpe.trainDistributedRounds(Seq("ab").toDF("text"), 1, minPairFreq = 0)
+    }
   }
 
   test("cpLess is UTF-8 binary order: astral code points sort above BMP high chars") {
